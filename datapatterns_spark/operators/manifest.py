@@ -77,19 +77,39 @@ def _sweep_orphans(spark: SparkSession, path: str, done: set[str]) -> int:
     ``__HIVE_DEFAULT_PARTITION__`` directory; that directory is
     committed iff the manifest holds either value — unquoting it to a
     literal never in ``done`` would wrongly sweep COMMITTED results on
-    every resume."""
+    every resume.
+
+    Loose ``*.parquet`` files directly under verdicts/violations are the
+    old flat (non-partitioned) layout, which the sweep cannot tell from
+    committed results: it raises ``ValueError`` before deleting
+    anything."""
     from urllib.parse import unquote
 
     default_committed = (None in done) or ("" in done)
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    removed = 0
+    listings = []
     for sub in ("verdicts", "violations"):
         p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
         fs = p.getFileSystem(conf)
-        if not fs.exists(p):
-            continue
-        for st in fs.listStatus(p):
+        if fs.exists(p):
+            listings.append((fs, fs.listStatus(p)))
+    flat = [
+        str(st.getPath())
+        for _, sts in listings
+        for st in sts
+        if st.isFile() and st.getPath().getName().endswith(".parquet")
+    ]
+    if flat:
+        raise ValueError(
+            f"{path} holds output in the old flat (non-partitioned) "
+            f"layout, e.g. {flat[0]}; move it away or pick a new output "
+            "directory — resuming would mix it with hive partition= "
+            "directories"
+        )
+    removed = 0
+    for fs, sts in listings:
+        for st in sts:
             name = st.getPath().getName()
             if name == "_temporary":
                 fs.delete(st.getPath(), True)
@@ -127,6 +147,8 @@ def run_with_manifest(
     work lost on a crash; each batch appends verdicts, violations and
     manifest rows (parquet append is atomic per task-commit, and a
     partition appears in the manifest only after its results landed).
+    Raises ``ValueError``, before sweeping or writing anything, when
+    ``output_path`` holds the old flat (non-partitioned) layout.
     """
     spark = df.sparkSession
     done = completed_partitions(spark, output_path)

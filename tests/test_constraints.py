@@ -288,6 +288,32 @@ def test_manifest_sweep_orphans(spark, tmp_path):
     )
 
 
+def test_manifest_rejects_flat_layout(spark, tmp_path):
+    """Resuming into an output directory written by the old flat
+    (non-partitioned) layout must fail before anything is swept or
+    written: the sweep cannot tell loose flat files from committed
+    results, and appending hive partitions beside them leaves a mixed
+    directory that no longer reads back."""
+    import os
+
+    out = str(tmp_path / "flat")
+    spark.range(3).write.parquet(f"{out}/verdicts")
+    spark.range(3).write.parquet(f"{out}/violations")
+    os.makedirs(f"{out}/verdicts/partition=orphan")  # would be swept
+
+    def tree():
+        return sorted(
+            os.path.join(d, f) for d, dirs, files in os.walk(out) for f in dirs + files
+        )
+
+    before = tree()
+    df = generate_transcripts(spark, 20, seed=1).withColumn("part", F.lit("0"))
+    with pytest.raises(ValueError, match="flat"):
+        run_with_manifest(df, transcript_check_suite(), "part", out)
+    assert tree() == before
+    assert not os.path.exists(f"{out}/manifest")
+
+
 def test_manifest_resume(spark, tmp_path):
     df = generate_transcripts(spark, 200, seed=42, violation_rate=0.01).withColumn(
         "part", F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("string")

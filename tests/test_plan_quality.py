@@ -6,8 +6,6 @@ validation must be shuffle-free, no operator may fall back to per-row
 Python, and the small side of similarity joins must broadcast.
 """
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,25 +141,24 @@ def test_bucketed_table_group_checks_need_no_shuffle(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_profile_assembly_never_rescans_source(spark):
+def test_profile_assembly_never_rescans_source(spark, monkeypatch):
     """In approx mode the final assembly must consume materialized
     intermediates, never re-derive them from the source.  Default
     (driver tail): the returned plan is a pure literal frame — no
-    FileScan at all.  Cluster tail (DP_APPROX_TAIL=cluster): the
-    assembly reads the persisted/checkpointed intermediates
-    (ExistingRDD / cache scan)."""
+    FileScan at all.  Cluster tail (low-card histogram over
+    ``_DRIVER_TAIL_VH_LIMIT``): the assembly reads the
+    persisted/checkpointed intermediates (ExistingRDD / cache scan)."""
+    from datapatterns_spark.operators import profile as profile_mod
+
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     prof = profile(df, field_list=["l_returnflag", "l_quantity"], mode="approx")
     plan = _plan(prof)
     assert "Scan parquet" not in plan and "FileScan" not in plan
 
-    os.environ["DP_APPROX_TAIL"] = "cluster"
-    try:
-        prof = profile(df, field_list=["l_returnflag", "l_quantity"], mode="approx")
-        plan = _plan(prof)
-        assert "ExistingRDD" in plan or "InMemoryTableScan" in plan
-    finally:
-        del os.environ["DP_APPROX_TAIL"]
+    monkeypatch.setattr(profile_mod, "_DRIVER_TAIL_VH_LIMIT", -1)
+    prof = profile(df, field_list=["l_returnflag", "l_quantity"], mode="approx")
+    plan = _plan(prof)
+    assert "ExistingRDD" in plan or "InMemoryTableScan" in plan
 
 
 def test_incremental_state_prunes_and_stays_jvm(spark):
