@@ -894,24 +894,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_profile_quantile_sketch(spark, sf):
-        """Mergeable t-digest quantile state (round 4): per-partition
-        sketches merged into table quartiles, checked against the DATA
-        rather than against a SQL twin (a t-digest has no tractable
-        SQL re-derivation).  Output rows carry the MEASURED exact rank
-        of each merged estimate, bucketed to the nearest 0.25 — equal
-        to the target quantile only when the sketch meets its rank
-        error contract (<1%, vs the 12.5% bucket half-width).  Two
-        drift rows pin digest_drift at its analytic extremes: KS of a
-        distribution against itself (0) and against a
-        disjoint-support shift (1).
+        """Mergeable KLL quantile state: per-partition sketches merged
+        into table quartiles, checked against the DATA rather than
+        against a SQL twin (a KLL sketch has no tractable SQL
+        re-derivation).  Output rows carry the MEASURED exact rank of
+        each merged estimate, bucketed to the nearest 0.25 — equal to
+        the target quantile only when the sketch meets its rank error
+        contract (<1%, vs the 12.5% bucket half-width).  Two drift rows
+        pin digest_drift at its analytic extremes: KS of a distribution
+        against itself (0) and against a disjoint-support shift (1).
 
-        Round-5 hardening: structural rows pin each merged digest as a
-        GENUINE compressed sketch — centroid count inside the k1-scale
-        contract band [delta/4, 1.5*delta] (a degenerate one-centroid
-        digest, which could land the right rank bucket by luck on a
-        skewed column, fails the floor; an uncompressed value dump
-        fails the ceiling) and the serialized payload exactly
-        31 + 16*centroids bytes (the TD1 wire format)."""
+        Structural rows pin each merged sketch as a GENUINE compressed
+        KLL sketch of the whole column: its k is the one quantile_delta
+        configures (4 * delta), its n is the exact filled count (every
+        partition's values reached the merge, none twice), and it
+        retains fewer items than n (compressed, not a value dump) yet
+        no more than its own capacity."""
         from datapatterns_spark.operators.incremental import (
             digest_drift,
             merge_states,
@@ -948,6 +946,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col(a).isNotNull() & (F.col(a).cast("double") != 0),
                 F.col(a).cast("double"),
             )
+            aggs.append(F.count(v).alias(f"{a}::n"))
             for q, col in qcols.items():
                 e = float(est[a][col])
                 aggs.append(
@@ -980,25 +979,38 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         far_ks = digest_drift(mk(even), mk(shifted)).collect()[0]["ks"]
         rows.append(("drift_same", "o_totalprice", 0.0, round(same_ks * 4) / 4))
         rows.append(("drift_far", "o_totalprice", 1.0, round(far_ks * 4) / 4))
-        # structural pins: per-attribute merged digest shape (the state
+        # structural pins: per-attribute merged sketch shape (the state
         # frame is (n_partitions x n_attrs) slim rows — driver-bounded)
-        from datapatterns_spark.functions.tdigest import TDigest
+        k = int(4 * delta)  # the documented quantile_delta -> k mapping
+        summary = F.kll_sketch_to_string_double("m")
 
-        by_attr: dict[str, list] = {}
-        for r in st.select("attribute", "q_sketch").collect():
-            by_attr.setdefault(r["attribute"], []).append(
-                TDigest.from_bytes(bytes(r["q_sketch"]))
+        def field(name):
+            return F.regexp_extract(
+                summary, rf"(?m)^\s*{name}\s*:\s*(\d+)", 1
+            ).cast("long").alias(name)
+
+        for r in (
+            st.groupBy("attribute")
+            .agg(F.kll_merge_agg_double("q_sketch").alias("m"))
+            .select(
+                "attribute",
+                F.kll_sketch_get_n_double("m").alias("n"),
+                field("K"),
+                field("Retained Items"),
+                field("Capacity Items"),
             )
-        for a in attrs:
-            d = TDigest.merge_all(by_attr[a])
-            c = int(d.means.size)
+            .collect()
+        ):
+            a, n = r["attribute"], r["n"]
+            kept = r["Retained Items"]
+            rows.append(("k", a, 1.0, 1.0 if r["K"] == k else 0.0))
             rows.append(
-                ("centroids", a, 1.0,
-                 1.0 if delta / 4 <= c <= 1.5 * delta else 0.0)
+                ("n", a, 1.0, 1.0 if n == ranks[f"{a}::n"] else 0.0)
             )
             rows.append(
-                ("sketch_bytes", a, 1.0,
-                 1.0 if len(d.to_bytes()) == 31 + 16 * c else 0.0)
+                ("retained", a, 1.0,
+                 1.0 if 0 < kept < n and kept <= r["Capacity Items"]
+                 else 0.0)
             )
         from datapatterns_spark.plans.local import lit_df
 
@@ -2796,7 +2808,7 @@ FROM src GROUP BY attribute
 """
 
     # ---- profile_quantile_sketch ----
-    # The t-digest itself has no tractable SQL re-derivation, so the
+    # The KLL sketch itself has no tractable SQL re-derivation, so the
     # Spark side outputs MEASURED verdicts (exact rank of each merged
     # estimate against the data, bucketed to the nearest 0.25; KS at
     # its analytic extremes) and the oracle pins the expected verdict
@@ -2813,11 +2825,12 @@ FROM src GROUP BY attribute
         "SELECT 'drift_far', 'o_totalprice', CAST(1.0 AS DOUBLE),"
         " CAST(1.0 AS DOUBLE)",
     ] + [
-        # structural pins (round 5): every merged digest must report
-        # in-band centroid count and exact wire-format size
+        # structural pins: every merged sketch must report the
+        # configured k, the exact filled count, and a compressed
+        # retained-item count within its capacity
         f"SELECT '{part}', '{a}', CAST(1.0 AS DOUBLE), CAST(1.0 AS DOUBLE)"
         for a in ["o_orderkey", "o_custkey", "o_totalprice"]
-        for part in ["centroids", "sketch_bytes"]
+        for part in ["k", "n", "retained"]
     ]
     profile_quantile_sketch_sql = " UNION ALL ".join(pqs_rows)
 

@@ -60,6 +60,25 @@ AUTO_SEGMENT_SIZE = 1_000_000
 MAX_VERDICT_PARTITIONS = 100_000
 
 
+def list_partitions(
+    df: DataFrame, part: Column, partition_col: object
+) -> list[str | None]:
+    """Distinct values of the string expression ``part``, NULL first
+    then ascending (Spark's ascending order).  ``limit(N+1)`` bounds
+    what can ever reach the driver, so a mistaken ``partition_col``
+    fails with ``ValueError`` after pulling at most N+1 slim rows,
+    never an OOM."""
+    rows = df.select(part).distinct().limit(MAX_VERDICT_PARTITIONS + 1).collect()
+    if len(rows) > MAX_VERDICT_PARTITIONS:
+        raise ValueError(
+            f"partition_col {partition_col!r} has more than "
+            f"{MAX_VERDICT_PARTITIONS} distinct values; per-partition "
+            "results are assembled driver-side, so pass a coarser "
+            "partition expression (e.g. a bucket transform of the key)"
+        )
+    return sorted((r[0] for r in rows), key=lambda p: (p is not None, p or ""))
+
+
 # ---------------------------------------------------------------------------
 # check definitions
 # ---------------------------------------------------------------------------
@@ -843,21 +862,7 @@ def run_checks(
     if partitions is not None:
         part_values = [str(p) for p in partitions]
     else:
-        # cardinality guard: limit(N+1) bounds what can ever reach the
-        # driver, so a mistaken partition_col fails with a clear error
-        # after pulling at most N+1 slim rows, never an OOM
-        part_rows = (
-            df.select(part).distinct().limit(MAX_VERDICT_PARTITIONS + 1).collect()
-        )
-        if len(part_rows) > MAX_VERDICT_PARTITIONS:
-            raise ValueError(
-                f"partition_col {partition_col!r} has more than "
-                f"{MAX_VERDICT_PARTITIONS} distinct values; per-partition "
-                "verdicts are assembled driver-side, so pass a coarser "
-                "partition expression (e.g. a bucket transform of the key) "
-                "or the expected values via partitions=[...]"
-            )
-        part_values = [r[0] for r in part_rows]
+        part_values = list_partitions(df, part, partition_col)
     if all_check_names:
         vmap = {(r["partition"], r["check_name"]): r for r in agg_rows}
         for prt in part_values:

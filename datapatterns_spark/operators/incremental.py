@@ -18,7 +18,8 @@ The per-partition states here give that diff at partition grain for
 free, and additionally make the whole-table profile incremental.
 
 Every state component merges with an associative+commutative Spark
-built-in aggregate (no Python in either pass):
+built-in aggregate, so neither the state pass nor the merge runs
+Python:
 
 ====================================  =================================
 state component                       merge operator
@@ -35,23 +36,27 @@ has_unicode                           ``max``
 num_n / num_sum / num_sumsq /         ``sum`` x3 / ``min`` / ``max``
 num_min / num_max                     -> exact mean + POPULATION
                                       std-dev (Profile.ecl:1083-1086)
-q_sketch (t-digest, opt-in via       centroid-merge
-``quantile_delta``)                   (functions/tdigest.py)
+q_sketch (DataSketches KLL, opt-in   ``kll_merge_agg_double`` ->
+via ``quantile_delta``)               ``kll_sketch_get_quantile_double``
 ====================================  =================================
 
-Exactness: every merged statistic except ``cardinality`` is EXACT and
-identical to a whole-table pass (grouping-independence is what the
-merge-operator table above buys); ``cardinality`` is a DataSketches
-HLL estimate (lgConfigK 14, typical error <1%) — the same documented
-deviation as the approx profile mode, but unlike approx mode the
-sketch itself is stored, so later partitions union in WITHOUT rescans.
+Exactness: every merged statistic except ``cardinality`` and the
+opt-in quartiles is EXACT and identical to a whole-table pass
+(grouping-independence is what the merge-operator table above buys);
+``cardinality`` is a DataSketches HLL estimate (lgConfigK 14, typical
+error <1%) and the quartiles come from a KLL sketch (normalized rank
+error 0.68% at k = 400) — the same documented deviation as the approx
+profile mode, but unlike approx mode the sketches themselves are
+stored, so later partitions merge in WITHOUT rescans.  A KLL merge
+compacts with a random bit, so two merges of one large store may
+return different retained values, each within the rank error.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import besttype
@@ -65,6 +70,7 @@ from ..plans.schema_walk import (
     AttrInfo,
     walk_schema,
 )
+from .constraints import list_partitions
 from .manifest import MANIFEST_SCHEMA, completed_partitions
 from ..functions.patterns import map_pattern
 from .profile import (
@@ -99,6 +105,33 @@ STATE_COLUMNS = [
     "num_min",
     "num_max",
 ]
+
+
+# KLL quantile sketch size.  ``quantile_delta`` is the opt-in and the
+# accuracy knob: k = 4 * delta, so delta 100 gives k = 400, a
+# normalized rank error of 0.68% (kll_sketch_to_string_double
+# "Epsilon"); DataSketches accepts k in [8, 65535].
+_KLL_K_MIN, _KLL_K_MAX = 8, 65535
+# DataSketches serialization preamble: byte 2 is the family id (15 =
+# KLL), bytes 4-5 the sketch's k, little-endian
+_KLL_FAMILY = 15
+
+
+def _kll_k(quantile_delta: float) -> int:
+    return min(max(int(round(4 * quantile_delta)), _KLL_K_MIN), _KLL_K_MAX)
+
+
+def _sketch_k(sketch: bytes, where: str) -> int:
+    """k of one serialized KLL sketch; ``ValueError`` for anything else
+    (e.g. the t-digest ``TD1`` sketches older stores hold)."""
+    if len(sketch) < 8 or sketch[2] != _KLL_FAMILY:
+        kind = "t-digest (TD1)" if sketch[:3] == b"TD1" else "non-KLL"
+        raise ValueError(
+            f"{where} holds {kind} quantile sketches; this version stores "
+            "DataSketches KLL sketches — rebuild the states in a fresh "
+            "state_path"
+        )
+    return int.from_bytes(sketch[4:6], "little")
 
 
 def _state_melt(
@@ -207,103 +240,6 @@ def _state_melt(
     return base.select("_part", F.inline(F.array(*structs)))
 
 
-_DIGEST_SCHEMA = "partition string, attribute string, q_sketch binary"
-
-
-def _quantile_value_cols(
-    attrs: list[AttrInfo], allow_zero: bool
-) -> list[tuple[str, Column]]:
-    """Per-attribute numeric-reading columns for the t-digest pass —
-    the same ``v`` definition as :func:`_state_melt` (native doubles
-    for given-numeric attributes with the allow-zero fill rule; gated
-    ``try_cast`` of the canonical string otherwise — binary included,
-    gated on BYTE length like the melt, so a binary column whose bytes
-    decode to numeric strings gets quartiles wherever it gets
-    num_n/mean/std).  Attributes with no numeric reading (boolean /
-    array) are skipped entirely, so the digest scan never reads their
-    columns."""
-    cols: list[tuple[str, Column]] = []
-    for a in attrs:
-        c = F.col(a.name)
-        if a.kind == KIND_NUMERIC:
-            filled = (
-                c.isNotNull()
-                if allow_zero
-                else (c.isNotNull() & (c.cast("double") != 0))
-            )
-            cols.append((a.name, F.when(filled, c.cast("double"))))
-        elif a.kind in (KIND_BOOLEAN, KIND_ARRAY):
-            continue
-        else:
-            v = _value_expr(a)
-            # binary gates on byte length, everything else on the
-            # string form's length — exactly _state_melt's lncol
-            ln = _len_expr(a) if a.kind == KIND_BINARY else F.length(v)
-            gate = (ln > 0) & (ln <= 40) & v.rlike("^[0-9+\\-.]")
-            cols.append((a.name, F.when(gate, v.try_cast("double"))))
-    return cols
-
-
-def _attr_digests(
-    df: DataFrame,
-    attrs: list[AttrInfo],
-    allow_zero: bool,
-    part: Column,
-    delta: float,
-) -> DataFrame:
-    """(partition, attribute) -> serialized t-digest, built without
-    ever materializing a group: ``mapInPandas`` emits one sub-digest
-    per (partition, attribute) per Arrow batch (memory bounded by the
-    batch size — a hot partition yields more slim sub-digest rows, not
-    a bigger task), then an ordinary shuffle of those few-KB rows
-    merges centroids per group.  Both steps are the sanctioned
-    Arrow-vectorized shapes; the value math inside is numpy."""
-    value_cols = _quantile_value_cols(attrs, allow_zero)
-    if not value_cols:
-        return df.sparkSession.createDataFrame([], _DIGEST_SCHEMA)
-    names = [n for n, _ in value_cols]
-
-    def _subs(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..functions.tdigest import TDigest
-
-        for pdf in batches:
-            rows = []
-            for p, grp in pdf.groupby("_part", sort=False, dropna=False):
-                for n in names:
-                    d = TDigest.from_values(
-                        grp[n].to_numpy(dtype=np.float64, copy=False), delta
-                    )
-                    if d.means.size:
-                        rows.append((p, n, d.to_bytes()))
-            yield pd.DataFrame(
-                rows, columns=["partition", "attribute", "q_sketch"]
-            )
-
-    def _merge(key, pdf):
-        import pandas as pd
-
-        from ..functions.tdigest import TDigest
-
-        d = TDigest.merge_all(
-            [TDigest.from_bytes(bytes(b)) for b in pdf["q_sketch"]]
-        )
-        return pd.DataFrame(
-            [(key[0], key[1], d.to_bytes())],
-            columns=["partition", "attribute", "q_sketch"],
-        )
-
-    slim = df.select(
-        part.alias("_part"), *[v.alias(n) for n, v in value_cols]
-    )
-    subs = slim.mapInPandas(_subs, _DIGEST_SCHEMA)
-    return subs.groupBy("partition", "attribute").applyInPandas(
-        _merge, _DIGEST_SCHEMA
-    )
-
-
 def profile_state(
     df: DataFrame,
     partition_col: str | Column | None = None,
@@ -317,12 +253,14 @@ def profile_state(
     unit of work of :func:`profile_incremental`.  ``partition_col``
     defaults to a whole-input constant.
 
-    ``quantile_delta`` opts into a mergeable t-digest quantile sketch
-    per state row (column ``q_sketch``, functions/tdigest.py) built in
-    a second column-pruned pass over only the numeric-readable
-    attributes.  Like the HLL cardinality sketch this is the documented
-    approx-mode deviation: the one-shot profile's exact positional
-    quartiles cannot merge, the digest can."""
+    ``quantile_delta`` opts into a mergeable quantile sketch per state
+    row (column ``q_sketch``): a DataSketches KLL sketch of the numeric
+    reading ``v``, built by ``kll_sketch_agg_double`` as one more
+    aggregate of the same ``groupBy`` (k = 4 * delta, see
+    :func:`_kll_k`).  Rows with no numeric value get a NULL sketch.
+    Like the HLL cardinality sketch this is the documented approx-mode
+    deviation: the one-shot profile's exact positional quartiles
+    cannot merge, the sketch can."""
     attrs, _children = walk_schema(df.schema, field_list=field_list)
     pname = partition_col if isinstance(partition_col, str) else None
     if pname is not None:
@@ -355,7 +293,7 @@ def profile_state(
         .when(F.col("fpat").isNull(), F.lit(0))
         .otherwise(besttype.type_flag(F.col("fpat"), treat_as_is=False))
     )
-    state = melted.groupBy(F.col("_part").alias("partition"), "attribute").agg(
+    aggs = [
         F.count(F.lit(1)).alias("rec_count"),
         F.coalesce(F.sum("fil"), F.lit(0)).cast("long").alias("fill_count"),
         F.min(F.when(fil, F.col("len"))).alias("min_length"),
@@ -374,28 +312,25 @@ def profile_state(
         F.sum(F.col("v") * F.col("v")).alias("num_sumsq"),
         F.min("v").alias("num_min"),
         F.max("v").alias("num_max"),
+    ]
+    out_cols = list(STATE_COLUMNS)
+    if quantile_delta is not None:
+        aggs.append(
+            F.when(
+                F.count("v") > 0,
+                F.kll_sketch_agg_double("v", _kll_k(quantile_delta)),
+            ).alias("q_sketch")
+        )
+        out_cols.append("q_sketch")
+    state = melted.groupBy(F.col("_part").alias("partition"), "attribute").agg(
+        *aggs
     )
     meta = lit_df(
         df.sparkSession,
         [(a.name, a.kind, a.given_type, a.ordinal) for a in attrs],
         "attribute string, kind string, given_attribute_type string, ordinal int",
     )
-    out = state.join(F.broadcast(meta), "attribute").select(*STATE_COLUMNS)
-    if quantile_delta is not None:
-        digests = _attr_digests(
-            df, attrs, allow_zero, part, quantile_delta
-        ).withColumnsRenamed({"partition": "_dp", "attribute": "_da"})
-        # null-SAFE on partition: a null partition key is a legal state
-        # row (both passes keep it), and a plain equi-join would
-        # silently drop its sketch — quantiles would then exclude
-        # values that every other statistic includes
-        out = out.join(
-            digests,
-            out["partition"].eqNullSafe(digests["_dp"])
-            & (out["attribute"] == digests["_da"]),
-            "left",
-        ).drop("_dp", "_da")
-    return out
+    return state.join(F.broadcast(meta), "attribute").select(*out_cols)
 
 
 def merge_states(states: DataFrame) -> DataFrame:
@@ -405,10 +340,12 @@ def merge_states(states: DataFrame) -> DataFrame:
     Pure second-level aggregation over (n_partitions x n_attributes)
     tiny rows — no data rescans.  All output statistics are exact
     except ``cardinality`` (HLL union estimate) and — when the states
-    carry a ``q_sketch`` column — the t-digest quartiles
+    carry a ``q_sketch`` column — the KLL quartiles
     (``numeric_lower_quartile`` / ``numeric_median`` /
     ``numeric_upper_quartile``, same naming as the one-shot approx
-    profile)."""
+    profile): one ``kll_merge_agg_double`` in the same aggregation,
+    then one ``kll_sketch_get_quantile_double`` lookup.  A KLL quantile
+    is a retained input value, never an interpolation between two."""
     has_q = "q_sketch" in states.columns
     merged = states.groupBy("attribute").agg(
         F.first("kind").alias("kind"),
@@ -430,6 +367,7 @@ def merge_states(states: DataFrame) -> DataFrame:
         F.sum("num_sumsq").alias("num_sumsq"),
         F.min("num_min").alias("num_min"),
         F.max("num_max").alias("num_max"),
+        *([F.kll_merge_agg_double("q_sketch").alias("q_sketch")] if has_q else []),
     )
     # best-type lattice from the merged folds (same inputs as the main
     # profile's _attach_best_type); the per-attribute kind/given-type
@@ -457,49 +395,26 @@ def merge_states(states: DataFrame) -> DataFrame:
     mean = F.col("num_sum") / n
     quartile_cols: list = []
     if has_q:
-
-        def _qmerge(key, pdf):
-            import pandas as pd
-
-            from ..functions.tdigest import TDigest
-
-            d = TDigest.merge_all(
-                [TDigest.from_bytes(bytes(b)) for b in pdf["q_sketch"]]
-            )
-            if d.means.size == 0:
-                row = (key[0], None, None, None)
-            else:
-                row = (
-                    key[0],
-                    round(d.quantile(0.25), 4),
-                    round(d.quantile(0.50), 4),
-                    round(d.quantile(0.75), 4),
-                )
-            return pd.DataFrame(
-                [row],
-                columns=[
-                    "attribute",
+        # an all-NULL merge input yields an EMPTY (not NULL) sketch, and
+        # a quantile lookup on an empty sketch errors: gate on its n
+        merged = merged.withColumn(
+            "_q",
+            F.when(
+                F.kll_sketch_get_n_double("q_sketch") > 0,
+                F.kll_sketch_get_quantile_double(
+                    "q_sketch", F.lit([0.25, 0.5, 0.75])
+                ),
+            ),
+        )
+        quartile_cols = [
+            F.round(F.col("_q")[i], 4).alias(name)
+            for i, name in enumerate(
+                (
                     "numeric_lower_quartile",
                     "numeric_median",
                     "numeric_upper_quartile",
-                ],
+                )
             )
-
-        qdf = (
-            states.where(F.col("q_sketch").isNotNull())
-            .select("attribute", "q_sketch")
-            .groupBy("attribute")
-            .applyInPandas(
-                _qmerge,
-                "attribute string, numeric_lower_quartile double,"
-                " numeric_median double, numeric_upper_quartile double",
-            )
-        )
-        merged = merged.join(qdf, "attribute", "left")
-        quartile_cols = [
-            "numeric_lower_quartile",
-            "numeric_median",
-            "numeric_upper_quartile",
         ]
     return (
         merged.withColumn("best_attribute_type", best)
@@ -550,15 +465,57 @@ def merge_states(states: DataFrame) -> DataFrame:
     )
 
 
+# digest_drift reads each merged sketch at ranks 1/G, 2/G, ..., 1: the
+# grid adds at most 1/G to the sketches' own rank error
+_KS_GRID = 1000
+
+
+def _ks_distance(a: str, b: str) -> Column:
+    """KS distance between the KLL sketches in columns ``a`` and ``b``,
+    JVM-side.
+
+    ``kll_sketch_get_rank_double`` takes only a literal value, so each
+    sketch is read instead as a quantile grid at literal ranks i/G: the
+    grid value g_i is the smallest value of rank >= i/G, so
+    F(x) ~= #{g_i <= x} / G.  Both grids, tagged +1 (a) and -1 (b), are
+    sorted into one walk whose running sum ``c`` is G * (F_a - F_b);
+    the KS distance is its largest magnitude ``m``, read only once all
+    entries equal to a value are in (ties must not count as drift).
+    Written as one SQL expression: building it from Column calls costs
+    a py4j round trip per literal and lambda."""
+    ranks = ", ".join(f"{i / _KS_GRID!r}D" for i in range(1, _KS_GRID + 1))
+
+    def tagged(sketch: str, w: int) -> str:
+        return (
+            f"transform(kll_sketch_get_quantile_double({sketch}, array({ranks})),"
+            f" x -> named_struct('v', x, 'w', {w}))"
+        )
+
+    return F.expr(
+        f"""CASE WHEN kll_sketch_get_n_double({a}) > 0
+              AND kll_sketch_get_n_double({b}) > 0 THEN aggregate(
+            array_sort(concat({tagged(a, 1)}, {tagged(b, -1)})),
+            named_struct('c', 0, 'm', 0, 'v', CAST(NULL AS DOUBLE)),
+            (acc, e) -> named_struct(
+                'c', acc.c + e.w,
+                'm', IF(e.v > acc.v, greatest(acc.m, abs(acc.c)), acc.m),
+                'v', e.v),
+            acc -> greatest(acc.m, abs(acc.c)) / {_KS_GRID}D) END"""
+    )
+
+
 def digest_drift(base_states: DataFrame, cur_states: DataFrame) -> DataFrame:
-    """Per-attribute KS distance between two state stores' merged
-    t-digests: distribution drift computed from stored profile states
+    """Per-attribute KS distance between two state stores' merged KLL
+    sketches: distribution drift computed from stored profile states
     ALONE — no rescan of either dataset, unlike the value-histogram
     drift in operators/constraints.py (PSI/KS/JS), which needs a pass
-    over the current data.  Error is bounded by the digests' rank
-    error (functions/tdigest.py), so this is the 10^12-row drift
-    screen: run it per ingest from the checkpointed states, rescan
-    only attributes it flags."""
+    over the current data.  One aggregation merges each side's
+    sketches (``kll_merge_agg_double``) and :func:`_ks_distance` reads
+    both merged sketches, all in the JVM.  Error is bounded by the two
+    sketches' rank errors plus 1/_KS_GRID, so this is the 10^12-row
+    drift screen: run it per ingest from the checkpointed states,
+    rescan only attributes it flags.  ``ks`` is NULL where either side
+    has no numeric value."""
     for name, s in (("base_states", base_states), ("cur_states", cur_states)):
         if "q_sketch" not in s.columns:
             raise ValueError(
@@ -575,29 +532,18 @@ def digest_drift(base_states: DataFrame, cur_states: DataFrame) -> DataFrame:
         )
         .where(F.col("q_sketch").isNotNull())
     )
-
-    def _ks(key, pdf):
-        import math
-
-        import pandas as pd
-
-        from ..functions.tdigest import TDigest, ks_distance
-
-        sides = {
-            side: TDigest.merge_all(
-                [TDigest.from_bytes(bytes(b)) for b in grp["q_sketch"]]
-            )
-            for side, grp in pdf.groupby("side")
-        }
-        a, b = sides.get("base"), sides.get("cur")
-        ks = None
-        if a is not None and b is not None and a.means.size and b.means.size:
-            v = ks_distance(a, b)
-            ks = None if math.isnan(v) else v
-        return pd.DataFrame([(key[0], ks)], columns=["attribute", "ks"])
-
-    return tagged.groupBy("attribute").applyInPandas(
-        _ks, "attribute string, ks double"
+    side = F.col("side")
+    return (
+        tagged.groupBy("attribute")
+        .agg(
+            *[
+                F.kll_merge_agg_double(
+                    F.when(side == s, F.col("q_sketch"))
+                ).alias(s)
+                for s in ("base", "cur")
+            ]
+        )
+        .select("attribute", _ks_distance("base", "cur").alias("ks"))
     )
 
 
@@ -622,9 +568,12 @@ def profile_incremental(
 
     ``quantile_delta`` must match the store: mixing state rows with
     and without ``q_sketch`` would silently drop quantile coverage for
-    the sketchless partitions, so a mismatch against existing states
-    fails fast (the same param-pinning contract as the curation job's
-    run-params guard)."""
+    the sketchless partitions, and sketches of another k would mix
+    rank-error contracts, so a mismatch against existing states fails
+    fast (the same param-pinning contract as the curation job's
+    run-params guard), as does a store of the older t-digest (TD1)
+    sketches.  An unreadable manifest raises rather than reading as
+    "nothing done"."""
     spark = df.sparkSession
     done = completed_partitions(spark, state_path)
     if done:
@@ -638,35 +587,31 @@ def profile_incremental(
                 "state_path"
             )
         if quantile_delta is not None:
-            # pin the VALUE too: digests at different compressions merge
-            # without error but mix rank-error contracts silently.  The
-            # delta rides every serialized TD1 header, so one stored
-            # sketch answers for the whole store (profile_state writes a
-            # single delta per run, and this guard holds inductively).
+            # pin the VALUE too: sketches of different k merge without
+            # error but mix rank-error contracts silently.  k rides every
+            # serialized sketch header, so one stored sketch answers for
+            # the whole store (profile_state writes a single k per run,
+            # and this guard holds inductively).
             row = (
                 stored_df.where(F.col("q_sketch").isNotNull())
                 .select("q_sketch")
                 .first()
             )
             if row is not None:
-                from ..functions.tdigest import TDigest
-
-                stored_delta = TDigest.from_bytes(bytes(row[0])).delta
-                if stored_delta != float(quantile_delta):
+                stored_k = _sketch_k(bytes(row[0]), repr(state_path))
+                want_k = _kll_k(quantile_delta)
+                if stored_k != want_k:
                     raise ValueError(
                         "quantile_delta mismatch with existing states "
                         f"under {state_path!r}: stored sketches use "
-                        f"delta={stored_delta}, run requested "
-                        f"{float(quantile_delta)}; rerun with the "
+                        f"k={stored_k} (quantile_delta={stored_k / 4}), "
+                        f"run requested k={want_k} (quantile_delta="
+                        f"{float(quantile_delta)}); rerun with the "
                         "original setting or a fresh state_path"
                     )
-    parts = [
-        r["p"]
-        for r in df.select(F.col(partition_col).cast("string").alias("p"))
-        .distinct()
-        .orderBy("p")
-        .collect()
-    ]
+    parts = list_partitions(
+        df, F.col(partition_col).cast("string"), partition_col
+    )
     todo = [p for p in parts if p not in done]
     n_attrs = len(
         [

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.local import lit_df
-from .constraints import Check, run_checks
+from .constraints import Check, list_partitions, run_checks
 
 MANIFEST_SCHEMA = (
     "partition string, status string, started_at double, finished_at double, "
@@ -46,10 +46,20 @@ MANIFEST_SCHEMA = (
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        return spark.read.parquet(f"{path}/manifest")
-    except Exception:
+    """The manifest under ``path``; empty when there is none yet, or
+    when its directory holds no committed file (only ``_``/``.``
+    entries, e.g. the ``_temporary`` of a first write killed before
+    its commit).  Any other read failure (a corrupt file) propagates:
+    read as "nothing done", it would let the orphan sweep delete every
+    committed partition and a re-run duplicate all its results."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/manifest")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p) or all(
+        st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(p)
+    ):
         return lit_df(spark, [], MANIFEST_SCHEMA)
+    return spark.read.parquet(f"{path}/manifest")
 
 
 def completed_partitions(spark: SparkSession, path: str) -> set[str]:
@@ -153,13 +163,9 @@ def run_with_manifest(
     spark = df.sparkSession
     done = completed_partitions(spark, output_path)
     _sweep_orphans(spark, output_path, done)
-    parts = [
-        r["p"]
-        for r in df.select(F.col(partition_col).cast("string").alias("p"))
-        .distinct()
-        .orderBy("p")
-        .collect()
-    ]
+    parts = list_partitions(
+        df, F.col(partition_col).cast("string"), partition_col
+    )
     todo = [p for p in parts if p not in done]
 
     for i in range(0, len(todo), batch_size):

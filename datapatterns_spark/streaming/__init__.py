@@ -72,7 +72,7 @@ def profile_state_sink(
     over everything seen so far except cardinality (HLL union — and
     HLL register-max union is grouping-independent, so the estimate
     equals the single-pass sketch's).  ``quantile_delta`` adds the
-    mergeable t-digest quantile sketch per state row, so the rolling
+    mergeable KLL quantile sketch per state row, so the rolling
     profile also carries quartiles (approximate, rank-error-bounded —
     same contract as the batch incremental profile).  Batch writes go
     to per-batch subdirectories with overwrite so foreachBatch's

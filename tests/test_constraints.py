@@ -314,6 +314,73 @@ def test_manifest_rejects_flat_layout(spark, tmp_path):
     assert not os.path.exists(f"{out}/manifest")
 
 
+def _file_tree(root):
+    import os
+
+    return sorted(
+        (os.path.join(d, f), os.path.getsize(os.path.join(d, f)))
+        for d, _dirs, files in os.walk(root)
+        for f in files
+    )
+
+
+def test_manifest_corrupt_raises(spark, tmp_path):
+    """A manifest that exists but cannot be read must raise, not read as
+    "nothing done": that would sweep every committed partition= directory
+    and re-run (and re-append) all of them."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "corrupt")
+    df = generate_transcripts(spark, 40, seed=3).withColumn(
+        "part", F.pmod(F.xxhash64("conv_id"), F.lit(2)).cast("string")
+    )
+    checks = transcript_check_suite()
+    run_with_manifest(df, checks, "part", out)
+    shutil.rmtree(f"{out}/manifest")
+    os.makedirs(f"{out}/manifest")
+    with open(f"{out}/manifest/part-00000.snappy.parquet", "wb") as fh:
+        fh.write(b"not a parquet file" * 8)
+    before = _file_tree(out)
+    with pytest.raises(Exception):
+        run_with_manifest(df, checks, "part", out)
+    assert _file_tree(out) == before
+
+
+def test_manifest_uncommitted_reads_empty(spark, tmp_path):
+    """A manifest directory with no committed file (a first write killed
+    before its commit) still reads as "nothing done"."""
+    import os
+
+    out = str(tmp_path / "uncommitted")
+    os.makedirs(f"{out}/manifest/_temporary/0")
+    assert completed_partitions(spark, out) == set()
+    assert completed_partitions(spark, str(tmp_path / "missing")) == set()
+
+
+def test_partition_listing_capped_and_null_first(spark, tmp_path, monkeypatch):
+    """Partition listings pull at most cap+1 values and fail past the
+    cap; under it, NULL sorts first, then ascending, as in Spark."""
+    df = spark.createDataFrame(
+        [("b", 1), (None, 2), ("a", 3), ("", 4), ("b", 5)],
+        "part string, v int",
+    )
+    assert C.list_partitions(df, F.col("part"), "part") == [None, "", "a", "b"]
+    monkeypatch.setattr(C, "MAX_VERDICT_PARTITIONS", 3)
+    with pytest.raises(ValueError, match="more than 3 distinct"):
+        C.list_partitions(df, F.col("part"), "part")
+    # run_with_manifest lists through the same cap, before writing
+    named = df.where(F.col("part") != "")
+    out = str(tmp_path / "capped")
+    monkeypatch.setattr(C, "MAX_VERDICT_PARTITIONS", 1)
+    with pytest.raises(ValueError, match="more than 1 distinct"):
+        run_with_manifest(named, [C.row_rule("v_pos", "v > 0")], "part", out)
+    assert _file_tree(out) == []
+    monkeypatch.setattr(C, "MAX_VERDICT_PARTITIONS", 2)
+    run_with_manifest(named, [C.row_rule("v_pos", "v > 0")], "part", out)
+    assert completed_partitions(spark, out) == {"a", "b"}
+
+
 def test_manifest_resume(spark, tmp_path):
     df = generate_transcripts(spark, 200, seed=42, violation_rate=0.01).withColumn(
         "part", F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("string")

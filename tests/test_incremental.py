@@ -142,11 +142,51 @@ def test_profile_incremental_resume(fixture_df, tmp_path):
     shutil.rmtree(path, ignore_errors=True)
 
 
+def _file_tree(root):
+    import os
+
+    return sorted(
+        (os.path.join(d, f), os.path.getsize(os.path.join(d, f)))
+        for d, _dirs, files in os.walk(root)
+        for f in files
+    )
+
+
+def test_profile_incremental_corrupt_manifest_raises(fixture_df, tmp_path):
+    """An unreadable manifest must raise, not read as "nothing done":
+    that would re-profile every partition and append a second copy of
+    every state row."""
+    import os
+
+    path = str(tmp_path / "corrupt")
+    profile_incremental(fixture_df, "part", path)
+    shutil.rmtree(f"{path}/manifest")
+    os.makedirs(f"{path}/manifest")
+    with open(f"{path}/manifest/part-00000.snappy.parquet", "wb") as fh:
+        fh.write(b"not a parquet file" * 8)
+    before = _file_tree(path)
+    with pytest.raises(Exception):
+        profile_incremental(fixture_df, "part", path)
+    assert _file_tree(path) == before
+
+
+def test_profile_incremental_partition_cap(fixture_df, tmp_path, monkeypatch):
+    """The partition listing is capped like the verdict grid: past the
+    cap it fails before writing any state."""
+    from datapatterns_spark.operators import constraints as C
+
+    monkeypatch.setattr(C, "MAX_VERDICT_PARTITIONS", 2)
+    path = str(tmp_path / "capped")
+    with pytest.raises(ValueError, match="more than 2 distinct"):
+        profile_incremental(fixture_df, "part", path)
+    assert _file_tree(path) == []
+
+
 def test_binary_numeric_reading_includes_quartiles(spark):
     """A binary column whose bytes decode to numeric strings gets the
-    melt's numeric reading (num_n/mean) AND t-digest quartiles — the
-    two passes must agree on which attributes are numeric-readable
-    (ADVICE r4: _quantile_value_cols used to skip KIND_BINARY)."""
+    melt's numeric reading (num_n/mean) AND quartiles — both come from
+    the one numeric reading ``v``, so they cover the same attributes
+    (an earlier separate quantile pass skipped KIND_BINARY)."""
     rows = [
         ("p0", bytearray(b"10"), bytearray(b"zz")),
         ("p0", bytearray(b"20"), bytearray(b"yy")),

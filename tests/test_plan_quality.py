@@ -189,14 +189,17 @@ def test_incremental_state_prunes_and_stays_jvm(spark):
     assert "BatchEvalPython" not in mplan and "ArrowEvalPython" not in mplan
 
 
-def test_digest_pass_slim_shuffle(spark):
-    """The t-digest quantile pass must (a) build sub-digests map-side
-    via MapInPandas (never materializing a (partition, attribute)
-    group), (b) shuffle ONLY the slim serialized-digest rows — the
-    exchange above the MapInPandas carries exactly (partition,
-    attribute, q_sketch), no data columns — and (c) skip columns with
-    no numeric reading at its scan."""
-    from datapatterns_spark.operators.incremental import profile_state
+def test_quantile_sketch_in_state_aggregate(spark):
+    """The KLL quantile sketch is one more aggregate of the state pass:
+    (a) the source is scanned once, (b) ``kll_sketch_agg_double`` runs
+    in the partial aggregate below the exchange, so only slim partial
+    sketches are shuffled, and (c) no state, merge or drift plan
+    crosses into Python."""
+    from datapatterns_spark.operators.incremental import (
+        digest_drift,
+        merge_states,
+        profile_state,
+    )
 
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     st = profile_state(
@@ -206,21 +209,27 @@ def test_digest_pass_slim_shuffle(spark):
         quantile_delta=100.0,
     )
     plan = _plan(st)
-    assert "MapInPandas" in plan
-    assert "FlatMapGroupsInPandas" in plan  # the centroid merge
-    # the merge's exchange hash-partitions on (partition, attribute)
-    # and sits ABOVE the MapInPandas: the rows it moves are the few-KB
-    # sub-digests, not data
     lines = plan.splitlines()
-    mip = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    assert sum("FileScan" in ln for ln in lines) == 1
+    partial = [
+        i for i, ln in enumerate(lines) if "partial_kll_sketch_agg_double" in ln
+    ]
     exch = [
         i
         for i, ln in enumerate(lines)
         if "Exchange hashpartitioning" in ln and "attribute" in ln
     ]
-    assert any(i < mip for i in exch)  # plan prints consumers first
-    # row-at-a-time Python never appears
-    assert "BatchEvalPython" not in plan
+    assert len(partial) == 1 and exch
+    assert min(exch) < partial[0]  # plan prints consumers first
+    python_ops = (
+        "MapInPandas",
+        "FlatMapGroupsInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+    )
+    for out in (st, merge_states(st), digest_drift(st, st)):
+        plan = _plan(out)
+        assert not [op for op in python_ops if op in plan], plan
 
 
 def test_stratified_sample_skew_safe_shape(spark):

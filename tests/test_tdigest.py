@@ -1,21 +1,19 @@
-"""t-digest quantile sketch: pure-numpy accuracy/merge/serialization
-properties, the Spark mergeable-quantile state integration, and the
-sketch-based drift screen."""
+"""Mergeable quantile state (DataSketches KLL, formerly a t-digest,
+hence the file name): accuracy, merge, round-trip and degenerate-input
+contracts of the sketch as profile_state stores it, the Spark state
+integration, and the sketch-based drift screen."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from datapatterns_spark.functions.tdigest import (
-    DEFAULT_COMPRESSION,
-    TDigest,
-    ks_distance,
-)
 from datapatterns_spark.operators.incremental import (
+    _sketch_k,
     digest_drift,
     merge_states,
     profile_incremental,
@@ -24,107 +22,132 @@ from datapatterns_spark.operators.incremental import (
 
 
 # ---------------------------------------------------------------------------
-# pure sketch properties
+# sketch contracts, on the sketches profile_state stores
 # ---------------------------------------------------------------------------
 def _rank_err(values: np.ndarray, est: float, q: float) -> float:
     return abs(float((values <= est).mean()) - q)
 
 
-def test_quantile_accuracy_skewed():
+def _states(spark, values, n_parts: int = 1, **kw):
+    """profile_state over ``values`` (attribute ``v``), split into
+    ``n_parts`` contiguous partitions."""
+    parts = np.array_split(np.asarray(values, dtype=np.float64), n_parts)
+    pdf = pd.DataFrame(
+        {
+            "part": np.concatenate(
+                [np.full(p.size, f"p{i}") for i, p in enumerate(parts)]
+            ),
+            "v": np.concatenate(parts),
+        }
+    )
+    df = spark.createDataFrame(pdf, "part string, v double")
+    return profile_state(df, "part", quantile_delta=100.0, **kw)
+
+
+def _merged(states, qs):
+    """(n, quantiles at ``qs``) of attribute v's merged sketch."""
+    r = (
+        states.where(F.col("attribute") == "v")
+        .agg(F.kll_merge_agg_double("q_sketch").alias("m"))
+        .select(
+            F.kll_sketch_get_n_double("m").alias("n"),
+            F.kll_sketch_get_quantile_double("m", F.lit(list(qs))).alias("q"),
+        )
+        .first()
+    )
+    return r["n"], r["q"]
+
+
+def _ks(spark, a, b, **kw) -> float:
+    rows = digest_drift(_states(spark, a, **kw), _states(spark, b, **kw))
+    return {r["attribute"]: r["ks"] for r in rows.collect()}["v"]
+
+
+def test_quantile_accuracy_skewed(spark):
     rng = np.random.RandomState(7)
     v = rng.lognormal(0.0, 1.0, 100_000)
-    d = TDigest.from_values(v)
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        assert _rank_err(v, d.quantile(q), q) < 0.01
+    qs = (0.01, 0.25, 0.5, 0.75, 0.99)
+    _, est = _merged(_states(spark, v), qs)
+    for q, e in zip(qs, est):
+        assert _rank_err(v, e, q) < 0.01
 
 
-def test_merge_grouping_independence():
+def test_merge_grouping_independence(spark):
     rng = np.random.RandomState(11)
     v = rng.normal(0.0, 1.0, 60_000)
-    whole = TDigest.from_values(v)
+    qs = (0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0)
     for n_parts in (3, 17, 64):
-        merged = TDigest.merge_all(
-            [TDigest.from_values(p) for p in np.array_split(v, n_parts)]
-        )
-        assert merged.count == pytest.approx(whole.count)
-        assert merged.vmin == whole.vmin and merged.vmax == whole.vmax
-        for q in (0.1, 0.25, 0.5, 0.75, 0.9):
-            assert _rank_err(v, merged.quantile(q), q) < 0.01
+        n, est = _merged(_states(spark, v, n_parts), qs)
+        assert n == v.size
+        assert est[0] == v.min() and est[-1] == v.max()
+        for q, e in zip(qs[1:-1], est[1:-1]):
+            assert _rank_err(v, e, q) < 0.01
 
 
-def test_serialization_round_trip():
-    d = TDigest.from_values(np.arange(1000.0))
-    d2 = TDigest.from_bytes(d.to_bytes())
-    assert np.array_equal(d2.means, d.means)
-    assert np.array_equal(d2.weights, d.weights)
-    assert (d2.vmin, d2.vmax, d2.delta) == (d.vmin, d.vmax, d.delta)
-    with pytest.raises(ValueError):
-        TDigest.from_bytes(b"not a digest")
-
-
-def test_empty_and_degenerate():
-    e = TDigest.from_values([])
-    assert e.means.size == 0 and np.isnan(e.quantile(0.5))
-    assert TDigest.merge_all([e, e]).means.size == 0
-    one = TDigest.from_values([3.25])
-    assert one.quantile(0.0) == one.quantile(1.0) == 3.25
-    const = TDigest.from_values([5.0] * 1000)
-    assert const.quantile(0.5) == 5.0
-    # NaNs are dropped, not folded in
-    assert TDigest.from_values([1.0, np.nan, 3.0]).count == 2.0
-
-
-def test_cdf_boundary_conventions():
-    # constant column: the degenerate vmin == vmax digest must report
-    # P(V <= v) = 1 at its own value, not 0 (vmax check wins over vmin)
-    const = TDigest.from_values([5.0] * 1000)
-    assert const.cdf(5.0) == 1.0
-    assert const.cdf(4.999) == 0.0 and const.cdf(5.001) == 1.0
-    # observed minimum carries half of one sample's mass (Dunning's
-    # reference convention), never hard 0
-    d = TDigest.from_values(np.arange(100, dtype=np.float64))
-    assert d.cdf(0.0) == pytest.approx(0.5 / 100)
-    assert d.cdf(-0.001) == 0.0
-    # zero-inflated: mass concentrated AT the minimum must show in
-    # cdf(vmin) — side='right' interpolation lands past every zero-mean
-    # centroid, reporting the point mass minus half the last zero
-    # centroid (>= half the total at worst, ~0.27 of the true 0.30
-    # here); a hard 0 or bare 0.5/count would understate it 60-600x
-    # and make self-drift at the min look like real drift
-    zi = TDigest.from_values(
-        np.concatenate([np.zeros(3000), np.linspace(1, 10, 7000)])
+def test_serialization_round_trip(spark, tmp_path):
+    # 300 values stay below k = 400: every sketch, merged or not, holds
+    # all its values, so merges are deterministic and exact (larger
+    # merges compact with a random bit — equal only within rank error)
+    states = _states(spark, np.arange(1.0, 301.0), 3)
+    states.write.parquet(str(tmp_path / "st"))
+    back = spark.read.parquet(str(tmp_path / "st"))
+    key = ["partition", "attribute"]
+    assert sorted(map(tuple, back.select(*key, "q_sketch").collect())) == sorted(
+        map(tuple, states.select(*key, "q_sketch").collect())
     )
-    assert 0.15 <= zi.cdf(0.0) <= 0.301
+    merged = merge_states(back).collect()
+    assert merged == merge_states(states).collect()
+    assert merged[0]["numeric_median"] == 150.0
+    assert _sketch_k(bytes(back.first()["q_sketch"]), "store") == 400
+    with pytest.raises(ValueError):
+        _sketch_k(b"not a digest", "store")
 
 
-def test_merge_all_rejects_mixed_delta():
-    a = TDigest.from_values([1.0, 2.0], delta=100.0)
-    b = TDigest.from_values([3.0, 4.0], delta=200.0)
-    with pytest.raises(ValueError, match="differing delta"):
-        TDigest.merge_all([a, b])
-    # same delta still merges
-    assert TDigest.merge_all(
-        [a, TDigest.from_values([9.0], delta=100.0)]
-    ).count == 3.0
+def test_empty_and_degenerate(spark):
+    df = spark.createDataFrame(
+        [("p", None, 3.25 if i == 0 else None, 5.0) for i in range(1000)],
+        "part string, e double, one double, c double",
+    )
+    states = profile_state(df, "part", quantile_delta=100.0)
+    assert states.where(F.col("attribute") == "e").first()["q_sketch"] is None
+    got = {r["attribute"]: r for r in merge_states(states).collect()}
+    assert got["e"]["numeric_median"] is None
+    one = got["one"]
+    assert (
+        one["numeric_lower_quartile"]
+        == one["numeric_median"]
+        == one["numeric_upper_quartile"]
+        == 3.25
+    )
+    assert got["c"]["numeric_median"] == 5.0
+    # NaNs are dropped, not folded in
+    n, _ = _merged(_states(spark, [1.0, np.nan, 3.0]), (0.5,))
+    assert n == 2
 
 
-def test_cdf_quantile_consistency():
-    rng = np.random.RandomState(3)
-    v = rng.gamma(2.0, 2.0, 50_000)
-    d = TDigest.from_values(v)
-    for q in (0.1, 0.5, 0.9):
-        assert d.cdf(d.quantile(q)) == pytest.approx(q, abs=0.01)
-    assert d.cdf(d.vmin - 1) == 0.0 and d.cdf(d.vmax + 1) == 1.0
+def test_cdf_boundary_conventions(spark):
+    # constant columns: equal constants do not drift, and different
+    # ones are fully apart — ties are read as one step of the ECDF
+    assert _ks(spark, [5.0] * 1000, [5.0] * 1000) == 0.0
+    assert _ks(spark, [5.0] * 1000, [5.001] * 1000) == 1.0
+    # zero-inflated: mass concentrated AT the minimum shows in the ECDF
+    # (0.30 of the values), so dropping it reads as drift of 0.30 while
+    # the same distribution in another order does not drift
+    zi = np.concatenate([np.zeros(3000), np.linspace(1, 10, 7000)])
+    assert _ks(spark, zi, zi[::-1], allow_zero=True) < 0.02
+    assert _ks(spark, zi, zi[3000:], allow_zero=True) == pytest.approx(
+        0.30, abs=0.02
+    )
 
 
-def test_ks_distance_matches_analytic():
+def test_ks_distance_matches_analytic(spark):
     rng = np.random.RandomState(5)
-    a = TDigest.from_values(rng.normal(0, 1, 100_000))
-    b = TDigest.from_values(rng.normal(0.3, 1, 100_000))
-    same = TDigest.from_values(rng.normal(0, 1, 100_000))
+    a = rng.normal(0, 1, 100_000)
+    b = rng.normal(0.3, 1, 100_000)
+    same = rng.normal(0, 1, 100_000)
     # analytic KS(N(0,1), N(0.3,1)) = 2*Phi(0.15) - 1 ~= 0.1192
-    assert ks_distance(a, b) == pytest.approx(0.1192, abs=0.02)
-    assert ks_distance(a, same) < 0.02
+    assert _ks(spark, a, b) == pytest.approx(0.1192, abs=0.02)
+    assert _ks(spark, a, same) < 0.02
 
 
 @settings(max_examples=40, deadline=None)
@@ -137,23 +160,25 @@ def test_ks_distance_matches_analytic():
         max_size=500,
     )
 )
-def test_digest_properties(values):
+def test_digest_properties(spark, values):
     v = np.asarray(values)
-    d = TDigest.from_values(v)
-    assert d.count == pytest.approx(float(v.size))
-    assert d.vmin == v.min() and d.vmax == v.max()
+    states = _states(spark, v, allow_zero=True)
+    qs = (0.0, 0.25, 0.5, 0.75, 1.0)
+    n, est = _merged(states, qs)
+    assert n == v.size
+    assert est[0] == v.min() and est[-1] == v.max()
     # weight is conserved exactly through a merge-with-self
-    m = TDigest.merge_all([d, TDigest.from_bytes(d.to_bytes())])
-    assert m.count == pytest.approx(2.0 * v.size)
+    assert _merged(states.unionByName(states), qs)[0] == 2 * v.size
     # estimates stay inside the observed range
-    for q in (0.0, 0.25, 0.5, 0.75, 1.0):
-        assert v.min() <= d.quantile(q) <= v.max()
-    # rank error bound (generous: ~3/delta) on the median — two-sided
-    # so duplicate values (CDF jumps) don't misread as rank error
-    est = d.quantile(0.5)
-    eps = max(3.0 / DEFAULT_COMPRESSION, 1.5 / v.size)
-    assert float((v < est).mean()) <= 0.5 + eps
-    assert float((v <= est).mean()) >= 0.5 - eps
+    for e in est:
+        assert v.min() <= e <= v.max()
+    # rank error bound (generous: the t-digest's ~3/delta at delta 100)
+    # on the median — two-sided so duplicate values (CDF jumps) don't
+    # misread as rank error
+    med = est[2]
+    eps = max(3.0 / 100.0, 1.5 / v.size)
+    assert float((v < med).mean()) <= 0.5 + eps
+    assert float((v <= med).mean()) >= 0.5 - eps
 
 
 # ---------------------------------------------------------------------------
@@ -256,3 +281,32 @@ def test_digest_drift_screen(spark):
     assert ks["shifted"] > 0.3
     with pytest.raises(ValueError, match="q_sketch"):
         digest_drift(bs.drop("q_sketch"), cs)
+
+
+def test_td1_store_fails_fast(spark, skew_df, tmp_path):
+    """A store written with the older t-digest (TD1) sketches must fail
+    with a clear ValueError before anything is profiled or appended —
+    KLL functions would otherwise reject the bytes mid-job."""
+    import os
+
+    p = str(tmp_path / "td1")
+    profile_incremental(
+        skew_df.where(F.col("part") != "p2"), "part", p, quantile_delta=100.0
+    )
+    states = spark.read.parquet(f"{p}/states")
+    td1 = b"TD1" + bytes(28)  # the TD1 header of an empty digest
+    states.withColumn(
+        "q_sketch", F.when(F.col("q_sketch").isNotNull(), F.lit(td1))
+    ).write.parquet(f"{p}/states_td1")
+
+    def tree():
+        return sorted(
+            os.path.join(d, f) for d, _dirs, files in os.walk(p) for f in files
+        )
+
+    os.rename(f"{p}/states", f"{p}/states_kll")
+    os.rename(f"{p}/states_td1", f"{p}/states")
+    before = tree()
+    with pytest.raises(ValueError, match=r"t-digest \(TD1\)"):
+        profile_incremental(skew_df, "part", p, quantile_delta=100.0)
+    assert tree() == before
